@@ -22,8 +22,6 @@ k-means in the IVF path).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -602,18 +600,6 @@ def pq_quantize(
         )
     )
     cb = _pq_train(v, w, n_subspaces, codebook_size, seed)
-    if os.environ.get("SPARK_GRAFT_OPT_PQADC", "1") == "0":
-        # pre-r13 explode/min_by/groupBy encode, kept for A/B
-        best = _pq_assign(v, cb, w, n_subspaces)
-        return best.groupBy("vec_id").agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("sub_id", F.col("b.code").alias("code")))
-                ),
-                lambda s: s["code"],
-            ).alias("codes"),
-            F.sum("b.d2").alias("sq_err"),
-        )
     best_expr = F.transform(
         F.sequence(F.lit(0), F.lit(n_subspaces - 1)),
         lambda s: F.array_min(
@@ -748,27 +734,6 @@ def _pq_adc_expr(n_subspaces: int):
     )
 
 
-def _pq_assign(
-    v: DataFrame, cb: DataFrame, w: int, n_subspaces: int
-) -> DataFrame:
-    """Nearest codebook centroid per (vector, subspace): (vec_id,
-    sub_id, b struct<code, d2>). Subvector-explode -> broadcast-join
-    -> argmin; a stateless corpus scan, no shuffle beyond the
-    explode's map-side regrouping."""
-    subs = v.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.slice("v", i * w + 1, w) for i in range(n_subspaces)])
-        ).alias("sub_id", "sv"),
-    )
-    return (
-        subs.join(F.broadcast(cb), "sub_id")
-        .select("vec_id", "sub_id", "code", _pq_sqdist("sv", "cv").alias("d2"))
-        .groupBy("vec_id", "sub_id")
-        .agg(F.min_by(F.struct("code", "d2"), F.struct("d2", "code")).alias("b"))
-    )
-
-
 def _pq_train_local(
     train: DataFrame, w: int, n_subspaces: int, codebook_size: int,
     seed: int, spark,
@@ -828,6 +793,82 @@ def _pq_kmeans_np(x, w: int, n_subspaces: int, codebook_size: int, seed: int):
     return books
 
 
+def _unit_corpus(corpus: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """(vec_id, v): the corpus L2-normalized, zero-norm vectors dropped."""
+    return (
+        spread(
+            corpus.select(
+                F.col(id_col).alias("vec_id"),
+                as_double_vec(F.col(vec_col)).alias("raw"),
+            )
+        )
+        .withColumn("nv", norm(F.col("raw")))
+        .filter(F.col("nv") > 0)
+        .select(
+            "vec_id", F.transform("raw", lambda x: x / F.col("nv")).alias("v")
+        )
+    )
+
+
+def _unit_probes(probes: DataFrame) -> DataFrame:
+    """(probe_id, q): the probes L2-normalized, zero-norm probes dropped."""
+    return (
+        probes.select(F.col("probe_id"), F.col("probe_vec").alias("raw"))
+        .withColumn("nv", norm(F.col("raw")))
+        .filter(F.col("nv") > 0)
+        .select(
+            "probe_id", F.transform("raw", lambda x: x / F.col("nv")).alias("q")
+        )
+    )
+
+
+def _train_sample(v: DataFrame, salt: str, train_sample: int) -> DataFrame:
+    """Bounded deterministic training sample WITHOUT a corpus count: the
+    first ``train_sample`` rows in md5(salt || vec_id) order (the repo's
+    no-RNG rule — the hash order is an unbiased, reproducible shuffle).
+    Spark's sort-limit takes per-partition top-N then a single-partition
+    merge of N rows, so this is ONE corpus scan — a rate-based filter
+    would need a full count() job first (a second scan) just to derive
+    the sample rate. Corpora at or below train_sample still train on
+    everything (the limit is a no-op), keeping small-corpus results
+    bit-identical."""
+    return v.orderBy(
+        F.md5(F.concat(F.lit(salt), F.col("vec_id"))), "vec_id"
+    ).limit(train_sample)
+
+
+def _shortlist_rerank(
+    adc: DataFrame, vectors: DataFrame, p: DataFrame, shortlist: int, k: int
+) -> DataFrame:
+    """Keep the ``shortlist`` smallest adc_d2 per probe, then rerank them
+    by exact cosine (dot of unit vectors) to the top ``k``: (probe_id,
+    vec_id, sim, rank). Only shortlist x probes rows touch the float
+    ``vectors`` (vec_id, v)."""
+    wnd = W.partitionBy("probe_id").orderBy(
+        F.col("adc_d2").asc(), F.col("vec_id").asc()
+    )
+    short = (
+        adc.withColumn("sr", F.row_number().over(wnd))
+        .filter(F.col("sr") <= shortlist)
+        .select("probe_id", "vec_id")
+    )
+    sim = F.aggregate(
+        F.zip_with("v", "q", lambda a, b: a * b),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    rw = W.partitionBy("probe_id").orderBy(
+        F.col("sim").desc(), F.col("vec_id").asc()
+    )
+    return (
+        short.join(vectors, "vec_id")
+        .join(F.broadcast(p), "probe_id")
+        .select("probe_id", "vec_id", sim.alias("sim"))
+        .withColumn("rank", F.row_number().over(rw))
+        .filter(F.col("rank") <= k)
+    )
+
+
 def pq_adc_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -878,33 +919,8 @@ def pq_adc_topk(
     if dim % n_subspaces:
         raise ValueError("dim must divide evenly into subspaces")
     w = dim // n_subspaces
-    unit = F.transform("raw", lambda x: x / F.col("nv"))
-    v = (
-        spread(
-            corpus.select(
-                F.col(id_col).alias("vec_id"),
-                as_double_vec(F.col(vec_col)).alias("raw"),
-            )
-        )
-        .withColumn("nv", norm(F.col("raw")))
-        .filter(F.col("nv") > 0)
-        .select("vec_id", unit.alias("v"))
-    )
-    # bounded deterministic training sample WITHOUT a corpus count:
-    # the first train_sample rows in md5(vec_id) order (the repo's
-    # no-RNG rule — the hash order is an unbiased, reproducible
-    # shuffle). Spark's sort-limit takes per-partition top-N then a
-    # single-partition merge of N rows, so this is ONE corpus scan —
-    # the old rate-based filter needed a full count() job first (a
-    # second scan) just to derive the sample rate. Corpora at or
-    # below train_sample still train on everything (the limit is a
-    # no-op), keeping small-corpus results bit-identical.
-    train = (
-        v.orderBy(
-            F.md5(F.concat(F.lit("pqts:"), F.col("vec_id"))), "vec_id"
-        )
-        .limit(train_sample)
-    )
+    v = _unit_corpus(corpus, vec_col, id_col)
+    train = _train_sample(v, "pqts:", train_sample)
     cb, n_train = _pq_train_local(
         train, w, n_subspaces, codebook_size, seed, v.sparkSession
     )
@@ -920,97 +936,32 @@ def pq_adc_topk(
                 F.lit(0).alias("rank"),
             )
         )
-    p = (
-        probes.select(
-            F.col("probe_id"), F.col("probe_vec").alias("raw")
-        )
-        .withColumn("nv", norm(F.col("raw")))
-        .filter(F.col("nv") > 0)
-        .select("probe_id", unit.alias("q"))
+    p = _unit_probes(probes)
+    # The codebooks, packed as one broadcast row (cbs_all[sub][code] ->
+    # centroid, code-ordered), let each vector row compute all its
+    # subspace codes in one in-row argmin; the per-probe LUT is packed
+    # the same way (lut[sub][code] -> partial d2), so the ADC distance is
+    # an in-row fold against the broadcast LUT. No subvector explode and
+    # no (vector, subspace) or (probe, vec) aggregation exchange: the
+    # only exchange before the rerank is the shortlist window's. argmin
+    # tie-breaks on (d2, code); the partials sum in fixed subspace order.
+    cb_packed = _pq_cb_packed(cb)
+    codes = v.crossJoin(F.broadcast(cb_packed)).select(
+        "vec_id", _pq_codes_expr("v", w, n_subspaces).alias("codes")
     )
-    if os.environ.get("SPARK_GRAFT_OPT_PQADC", "1") == "0":
-        # pre-r13 shape, kept for A/B: encode via subvector-explode ->
-        # broadcast-join -> min_by groupBy; ADC via (sub, code) join +
-        # (probe, vec) sum groupBy
-        codes = _pq_assign(v, cb, w, n_subspaces).select(
-            "vec_id", "sub_id", F.col("b.code").alias("code")
-        )
-        lut = (
-            p.select(
-                "probe_id",
-                F.posexplode(
-                    F.array(
-                        *[F.slice("q", i * w + 1, w) for i in range(n_subspaces)]
-                    )
-                ).alias("sub_id", "qv"),
-            )
-            .join(F.broadcast(cb), "sub_id")
-            .select(
-                "probe_id", "sub_id", "code", _pq_sqdist("qv", "cv").alias("pd")
-            )
-        )
-        adc = (
-            codes.join(F.broadcast(lut), ["sub_id", "code"])
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .groupBy("probe_id", "vec_id")
-            .agg(F.sum("pd").alias("adc_d2"))
-        )
-    else:
-        # r13 fused path (guide §2.4 — remove shuffles outright): the
-        # codebooks, PACKED as one broadcast row (cbs_all[sub][code] ->
-        # centroid, code-ordered), let each vector row compute ALL its
-        # subspace codes in ONE in-row argmin expression — no subvector
-        # explode, no 16x joined rows per (vector, subspace), and the
-        # min_by aggregation exchange disappears. The per-probe LUT is
-        # likewise packed (lut[sub][code] -> partial d2) so the ADC
-        # distance is an in-row 4-term fold against the broadcast LUT —
-        # the old (probe, vec)-keyed aggregation exchange, which at
-        # corpus scale carried |corpus| x |probes| rows, disappears
-        # too. Same arithmetic on the same slices (sqdist is the same
-        # deterministic left-fold; argmin tie-breaks (d2, code) exactly
-        # like min_by's struct ordering); the 4 partials now sum in
-        # fixed subspace order, which only pins what the old shuffled
-        # SUM left unspecified in the last float bits. The only
-        # exchange left before the rerank is the shortlist window's.
-        cb_packed = _pq_cb_packed(cb)
-        codes = v.crossJoin(F.broadcast(cb_packed)).select(
-            "vec_id", _pq_codes_expr("v", w, n_subspaces).alias("codes")
-        )
-        p_lut = p.crossJoin(F.broadcast(cb_packed)).select(
-            "probe_id", _pq_lut_expr("q", w, n_subspaces).alias("lut")
-        )
-        adc = (
-            codes.crossJoin(F.broadcast(p_lut))
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .select(
-                "probe_id", "vec_id",
-                _pq_adc_expr(n_subspaces).alias("adc_d2"),
-            )
-        )
-    wnd = W.partitionBy("probe_id").orderBy(
-        F.col("adc_d2").asc(), F.col("vec_id").asc()
+    p_lut = p.crossJoin(F.broadcast(cb_packed)).select(
+        "probe_id", _pq_lut_expr("q", w, n_subspaces).alias("lut")
     )
-    short = (
-        adc.withColumn("r", F.row_number().over(wnd))
-        .filter(F.col("r") <= shortlist)
-        .select("probe_id", "vec_id")
+    adc = (
+        codes.crossJoin(F.broadcast(p_lut))
+        .filter(F.col("vec_id") != F.col("probe_id"))
+        .select(
+            "probe_id", "vec_id",
+            _pq_adc_expr(n_subspaces).alias("adc_d2"),
+        )
     )
-    # exact rerank: only shortlist x probe rows touch the float vectors
-    sim = F.aggregate(
-        F.zip_with("v", "q", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    rw = W.partitionBy("probe_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        short.join(v, "vec_id")
-        .join(F.broadcast(p), "probe_id")
-        .select("probe_id", "vec_id", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-    )
+    return _shortlist_rerank(adc, v, p, shortlist, k)
+
 
 def _ivfpq_train_local(
     train: DataFrame,
@@ -1079,10 +1030,10 @@ def _ivfpq_encode(
 ) -> tuple[DataFrame, DataFrame]:
     """Encode unit vectors against frozen IVF+PQ quantizers — shared by
     the in-query path (ivf_pq_topk) and the persisted build
-    (ivf_pq_build). Returns (assigned, codes): assigned carries
+    (_ivfpq_packed). Returns (assigned, codes): assigned carries
     (vec_id, cell, v) — cell assignment plus the float vector for
-    rerank storage — and codes carries one (vec_id, cell, sub_id, code)
-    row per subspace.
+    rerank storage — and codes carries one (vec_id, cell, codes
+    array<int>) row per vector.
 
     Cell assignment + residual run via broadcast-centroid join and a
     vec_id-keyed argmax aggregation. This DOES hash-exchange the
@@ -1120,27 +1071,6 @@ def _ivfpq_encode(
             F.zip_with("v", "cv", lambda a, b: a - b).alias("r"),
         )
     )
-    if os.environ.get("SPARK_GRAFT_OPT_IVFPQ", "1") == "0":
-        # pre-r13 rows form, kept for A/B: per-subspace codes via
-        # explode -> broadcast-join -> min_by, cell kept on the row.
-        # Schema: one (vec_id, cell, sub_id, code) row per subspace —
-        # callers branch on the same env var.
-        subs = res.select(
-            "vec_id", "cell",
-            F.posexplode(
-                F.array(*[F.slice("r", i * w + 1, w) for i in range(n_subspaces)])
-            ).alias("sub_id", "sv"),
-        )
-        codes = (
-            subs.join(F.broadcast(cb), "sub_id")
-            .select(
-                "vec_id", "cell", "sub_id", "code",
-                _pq_sqdist("sv", "cv").alias("d2"),
-            )
-            .groupBy("vec_id", "cell", "sub_id")
-            .agg(F.min_by("code", F.struct("d2", "code")).alias("code"))
-        )
-        return assigned, codes
     # r13 fused encode (guide §2.4, same as pq_adc_topk): all subspace
     # codes of a vector computed in ONE in-row argmin expression over
     # the packed broadcast codebooks — no subvector explode, no min_by
@@ -1155,6 +1085,96 @@ def _ivfpq_encode(
         "vec_id", "cell", _pq_codes_expr("r", w, n_subspaces).alias("codes")
     )
     return assigned, codes
+
+
+def _ivfpq_packed(
+    v: DataFrame, cents: DataFrame, cb: DataFrame, w: int, n_subspaces: int
+) -> DataFrame:
+    """Rows of the persisted cell-partitioned code table, (vec_id, cell,
+    codes, v) — shared by ivf_pq_build and ivf_pq_append. ``codes`` is
+    the sub_id-ordered code array; ``v`` rides along for the exact
+    rerank."""
+    assigned, codes = _ivfpq_encode(v, cents, cb, w, n_subspaces)
+    return codes.join(assigned.select("vec_id", "v"), "vec_id")
+
+
+def _ivfpq_probe_cells(p: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """The ``nprobe`` nearest cells per unit probe (probe_id, q), with
+    one residual query per (probe, cell): (probe_id, cell,
+    qr = q - centroid(cell))."""
+    return (
+        p.join(F.broadcast(cents))
+        .select(
+            "probe_id", "q", "cent_id", "cv",
+            dot(F.col("q"), F.col("cv")).alias("cs"),
+        )
+        .withColumn(
+            "pr",
+            F.row_number().over(
+                W.partitionBy("probe_id").orderBy(
+                    F.col("cs").desc(), "cent_id"
+                )
+            ),
+        )
+        .filter(F.col("pr") <= nprobe)
+        .select(
+            "probe_id",
+            F.col("cent_id").alias("cell"),
+            F.zip_with("q", "cv", lambda a, b: a - b).alias("qr"),
+        )
+    )
+
+
+def _ivfpq_adc(
+    probe_cells: DataFrame,
+    cb: DataFrame,
+    codes: DataFrame,
+    w: int,
+    n_subspaces: int,
+) -> DataFrame:
+    """Fused IVF+PQ ADC of a code table (vec_id, cell, codes) against
+    the probed cells: (probe_id, vec_id, adc_d2). The per-(probe, cell)
+    LUT rides packed on one broadcast row, the cell join IS the IVF
+    prune, and the n_subspaces partials sum in-row — no code-row
+    explode and no (probe, vec)-keyed aggregation exchange (|probed
+    corpus| x |probes| rows at scale). ||qr - code(r)||^2 ~
+    ||q - v||^2 = 2 - 2 cos on the unit sphere."""
+    lut_p = probe_cells.crossJoin(F.broadcast(_pq_cb_packed(cb))).select(
+        "probe_id", "cell", _pq_lut_expr("qr", w, n_subspaces).alias("lut")
+    )
+    return (
+        codes.select("vec_id", "cell", "codes")
+        .join(F.broadcast(lut_p), "cell")
+        .filter(F.col("vec_id") != F.col("probe_id"))
+        .select(
+            "probe_id", "vec_id",
+            _pq_adc_expr(n_subspaces).alias("adc_d2"),
+        )
+    )
+
+
+def _read_pq_codebook(spark, index_dir: str) -> tuple[DataFrame, int, int]:
+    """An ivf_pq_build index's codebooks plus (n_subspaces, subvector
+    width), validated from ONE collect of the tiny table. The packed LUT
+    is indexed by code value (_pq_adc_expr), so sub_ids must be 0..n-1
+    and each subspace's codes 0..k-1: a foreign or hand-edited codebook
+    with a gap raises ValueError instead of silently yielding NULL
+    adc_d2."""
+    cb = spark.read.parquet(f"{index_dir}/codebooks")
+    rows = cb.select("sub_id", "code", F.size("cv").alias("w")).collect()
+    codes: dict[int, list[int]] = {}
+    for r in rows:
+        codes.setdefault(r["sub_id"], []).append(r["code"])
+    widths = {r["w"] for r in rows}
+    contiguous = sorted(codes) == list(range(len(codes))) and all(
+        sorted(c) == list(range(len(c))) for c in codes.values()
+    )
+    if not contiguous or len(widths) != 1:
+        raise ValueError(
+            f"{index_dir}/codebooks: expected sub_id 0..n-1, codes 0..k-1 "
+            "per subspace and one subvector width"
+        )
+    return cb, len(codes), widths.pop()
 
 
 def ivf_pq_topk(
@@ -1189,11 +1209,10 @@ def ivf_pq_topk(
     fixed MB at any corpus size) and freeze; the corpus is touched by
     (1) the encode scan — cell/residual via broadcast-centroid joins
     (one bounded vector exchange; see the inline measurement note) and
-    codes via a broadcast-codebook join whose min_by aggregation
-    combines map-side — and (2) the ADC
-    scan, which reads only
-    (cell, codes) rows and — were the code table written partitioned
-    by cell, as ingest would — only the probed cells' partitions.
+    codes via one in-row argmin over the packed broadcast codebooks —
+    and (2) the ADC scan, which reads only (cell, codes) rows and —
+    were the code table written partitioned by cell, as ingest would —
+    only the probed cells' partitions.
     Floats are read once more for the per-probe ``shortlist`` exact
     rerank.
 
@@ -1202,27 +1221,9 @@ def ivf_pq_topk(
     if dim % n_subspaces:
         raise ValueError("dim must divide evenly into subspaces")
     w = dim // n_subspaces
-    unit = F.transform("raw", lambda x: x / F.col("nv"))
-    v = (
-        spread(
-            corpus.select(
-                F.col(id_col).alias("vec_id"),
-                as_double_vec(F.col(vec_col)).alias("raw"),
-            )
-        )
-        .withColumn("nv", norm(F.col("raw")))
-        .filter(F.col("nv") > 0)
-        .select("vec_id", unit.alias("v"))
-    )
-    # one bounded deterministic sample trains BOTH quantizers (see
-    # pq_adc_topk for why sort-limit over md5 order is one scan and
-    # bit-identical to full training at or below train_sample rows)
-    train = (
-        v.orderBy(
-            F.md5(F.concat(F.lit("ivfpqts:"), F.col("vec_id"))), "vec_id"
-        )
-        .limit(train_sample)
-    )
+    v = _unit_corpus(corpus, vec_col, id_col)
+    # one bounded deterministic sample trains BOTH quantizers
+    train = _train_sample(v, "ivfpqts:", train_sample)
     cents, cb, n_train = _ivfpq_train_local(
         train, n_centroids, w, n_subspaces, codebook_size, seed,
         v.sparkSession,
@@ -1241,104 +1242,11 @@ def ivf_pq_topk(
                 F.lit(0).alias("rank"),
             )
         )
-    assigned, codes = _ivfpq_encode(v, cents, cb, w, n_subspaces)
-    p = (
-        probes.select(F.col("probe_id"), F.col("probe_vec").alias("raw"))
-        .withColumn("nv", norm(F.col("raw")))
-        .filter(F.col("nv") > 0)
-        .select("probe_id", unit.alias("q"))
-    )
-    # nprobe nearest cells per probe, then one residual query per
-    # (probe, cell): qr = q - centroid(cell)
-    probe_cells = (
-        p.join(F.broadcast(cents))
-        .select(
-            "probe_id", "q", "cent_id", "cv",
-            dot(F.col("q"), F.col("cv")).alias("cs"),
-        )
-        .withColumn(
-            "pr",
-            F.row_number().over(
-                W.partitionBy("probe_id").orderBy(
-                    F.col("cs").desc(), "cent_id"
-                )
-            ),
-        )
-        .filter(F.col("pr") <= nprobe)
-        .select(
-            "probe_id",
-            F.col("cent_id").alias("cell"),
-            F.zip_with("q", "cv", lambda a, b: a - b).alias("qr"),
-        )
-    )
-    if os.environ.get("SPARK_GRAFT_OPT_IVFPQ", "1") == "0":
-        # pre-r13: row-form LUT + (cell, sub, code) join + (probe, vec)
-        # sum aggregation, kept for A/B
-        lut = (
-            probe_cells.select(
-                "probe_id", "cell",
-                F.posexplode(
-                    F.array(
-                        *[F.slice("qr", i * w + 1, w) for i in range(n_subspaces)]
-                    )
-                ).alias("sub_id", "qv"),
-            )
-            .join(F.broadcast(cb), "sub_id")
-            .select(
-                "probe_id", "cell", "sub_id", "code",
-                _pq_sqdist("qv", "cv").alias("pd"),
-            )
-        )
-        adc = (
-            codes.join(F.broadcast(lut), ["cell", "sub_id", "code"])
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .groupBy("probe_id", "vec_id")
-            .agg(F.sum("pd").alias("adc_d2"))
-        )
-    else:
-        # r13 fused ADC (same as pq_adc_topk): the per-(probe, cell)
-        # LUT rides packed on one broadcast row, the cell join IS the
-        # IVF prune, and the n_subspaces partials sum in-row — the
-        # (probe, vec)-keyed aggregation exchange (|probed corpus| x
-        # |probes| rows at scale) disappears. ||qr - code(r)||^2 ~
-        # ||q - v||^2 = 2 - 2 cos on the unit sphere, as before.
-        lut_p = probe_cells.crossJoin(
-            F.broadcast(_pq_cb_packed(cb))
-        ).select(
-            "probe_id", "cell", _pq_lut_expr("qr", w, n_subspaces).alias("lut")
-        )
-        adc = (
-            codes.join(F.broadcast(lut_p), "cell")
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .select(
-                "probe_id", "vec_id",
-                _pq_adc_expr(n_subspaces).alias("adc_d2"),
-            )
-        )
-    wnd = W.partitionBy("probe_id").orderBy(
-        F.col("adc_d2").asc(), F.col("vec_id").asc()
-    )
-    short = (
-        adc.withColumn("sr", F.row_number().over(wnd))
-        .filter(F.col("sr") <= shortlist)
-        .select("probe_id", "vec_id")
-    )
-    # exact rerank over shortlist x probes float rows only
-    sim = F.aggregate(
-        F.zip_with("v", "q", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    rw = W.partitionBy("probe_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        short.join(v, "vec_id")
-        .join(F.broadcast(p), "probe_id")
-        .select("probe_id", "vec_id", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-    )
+    _, codes = _ivfpq_encode(v, cents, cb, w, n_subspaces)
+    p = _unit_probes(probes)
+    probe_cells = _ivfpq_probe_cells(p, cents, nprobe)
+    adc = _ivfpq_adc(probe_cells, cb, codes, w, n_subspaces)
+    return _shortlist_rerank(adc, v, p, shortlist, k)
 
 
 def ivf_pq_build(
@@ -1375,50 +1283,15 @@ def ivf_pq_build(
     if dim % n_subspaces:
         raise ValueError("dim must divide evenly into subspaces")
     w = dim // n_subspaces
-    unit = F.transform("raw", lambda x: x / F.col("nv"))
-    v = (
-        spread(
-            corpus.select(
-                F.col(id_col).alias("vec_id"),
-                as_double_vec(F.col(vec_col)).alias("raw"),
-            )
-        )
-        .withColumn("nv", norm(F.col("raw")))
-        .filter(F.col("nv") > 0)
-        .select("vec_id", unit.alias("v"))
-    )
-    train = (
-        v.orderBy(
-            F.md5(F.concat(F.lit("ivfpqts:"), F.col("vec_id"))), "vec_id"
-        )
-        .limit(train_sample)
-    )
+    v = _unit_corpus(corpus, vec_col, id_col)
+    train = _train_sample(v, "ivfpqts:", train_sample)
     cents, cb, n_train = _ivfpq_train_local(
         train, n_centroids, w, n_subspaces, codebook_size, seed,
         v.sparkSession,
     )
     if not n_train:
         raise ValueError("ivf_pq_build: empty corpus (no non-zero vectors)")
-    assigned, codes = _ivfpq_encode(v, cents, cb, w, n_subspaces)
-    # one array<int> row per vector, sub_id order pinned by array_sort
-    # over (sub_id, code) structs before the code projection
-    if os.environ.get("SPARK_GRAFT_OPT_IVFPQ", "1") == "0":
-        # pre-r13 rows-form codes: pack one sub_id-ordered array per
-        # vector via groupBy (kept for A/B)
-        packed = (
-            codes.groupBy("vec_id", "cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub_id", "code"))),
-                    lambda s: s["code"],
-                ).alias("codes")
-            )
-            .join(assigned.select("vec_id", "v"), "vec_id")
-        )
-    else:
-        # r13 fused encode already yields the sub_id-ordered code array
-        # per vector — the packing groupBy (and its exchange) is gone
-        packed = codes.join(assigned.select("vec_id", "v"), "vec_id")
+    packed = _ivfpq_packed(v, cents, cb, w, n_subspaces)
     cents.write.mode("overwrite").parquet(f"{out_dir}/centroids")
     cb.write.mode("overwrite").parquet(f"{out_dir}/codebooks")
     packed.write.mode("overwrite").partitionBy("cell").parquet(
@@ -1453,37 +1326,9 @@ def ivf_pq_query(
     floats) reads the pruned scan. Returns (probe_id, vec_id, sim,
     rank)."""
     cents = spark.read.parquet(f"{index_dir}/centroids")
-    cb = spark.read.parquet(f"{index_dir}/codebooks")
-    n_subspaces = cb.select(F.max("sub_id")).first()[0] + 1
-    p = (
-        probes.select(F.col("probe_id"), F.col("probe_vec").alias("raw"))
-        .withColumn("nv", norm(F.col("raw")))
-        .filter(F.col("nv") > 0)
-        .select(
-            "probe_id", F.transform("raw", lambda x: x / F.col("nv")).alias("q")
-        )
-    )
-    probe_cells = (
-        p.join(F.broadcast(cents))
-        .select(
-            "probe_id", "q", "cent_id", "cv",
-            dot(F.col("q"), F.col("cv")).alias("cs"),
-        )
-        .withColumn(
-            "pr",
-            F.row_number().over(
-                W.partitionBy("probe_id").orderBy(
-                    F.col("cs").desc(), "cent_id"
-                )
-            ),
-        )
-        .filter(F.col("pr") <= nprobe)
-        .select(
-            "probe_id",
-            F.col("cent_id").alias("cell"),
-            F.zip_with("q", "cv", lambda a, b: a - b).alias("qr"),
-        )
-    )
+    cb, n_subspaces, w = _read_pq_codebook(spark, index_dir)
+    p = _unit_probes(probes)
+    probe_cells = _ivfpq_probe_cells(p, cents, nprobe)
     # the bounded metadata collect: <= n_centroids distinct cells
     cells = sorted(
         r["cell"] for r in probe_cells.select("cell").distinct().collect()
@@ -1493,76 +1338,9 @@ def ivf_pq_query(
         F.col("cell").isin([int(c) for c in cells])
         if cells else F.lit(False)
     )
-    w = len(cb.select("cv").first()[0])  # subvector width from codebook
-    if os.environ.get("SPARK_GRAFT_OPT_IVFPQ", "1") == "0":
-        # pre-r13 row-form LUT + ADC, kept for A/B
-        lut = (
-            probe_cells.select(
-                "probe_id", "cell",
-                F.posexplode(
-                    F.array(
-                        *[F.slice("qr", i * w + 1, w) for i in range(n_subspaces)]
-                    )
-                ).alias("sub_id", "qv"),
-            )
-            .join(F.broadcast(cb), "sub_id")
-            .select(
-                "probe_id", "cell", "sub_id", "code",
-                _pq_sqdist("qv", "cv").alias("pd"),
-            )
-        )
-        code_rows = scan.select(
-            "vec_id", "cell", F.posexplode("codes").alias("sub_id", "code")
-        )
-        adc = (
-            code_rows.join(F.broadcast(lut), ["cell", "sub_id", "code"])
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .groupBy("probe_id", "vec_id")
-            .agg(F.sum("pd").alias("adc_d2"))
-        )
-    else:
-        # r13 fused ADC (see ivf_pq_topk): packed per-(probe, cell)
-        # LUT, cell join = the IVF prune, in-row fixed-order fold —
-        # no code-row explode, no (probe, vec) aggregation exchange
-        lut_p = probe_cells.crossJoin(
-            F.broadcast(_pq_cb_packed(cb))
-        ).select(
-            "probe_id", "cell",
-            _pq_lut_expr("qr", w, n_subspaces).alias("lut"),
-        )
-        adc = (
-            scan.select("vec_id", "cell", "codes")
-            .join(F.broadcast(lut_p), "cell")
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .select(
-                "probe_id", "vec_id",
-                _pq_adc_expr(n_subspaces).alias("adc_d2"),
-            )
-        )
-    wnd = W.partitionBy("probe_id").orderBy(
-        F.col("adc_d2").asc(), F.col("vec_id").asc()
-    )
-    short = (
-        adc.withColumn("sr", F.row_number().over(wnd))
-        .filter(F.col("sr") <= shortlist)
-        .select("probe_id", "vec_id")
-    )
-    # exact rerank reads floats from the SAME pruned partitioned scan
-    sim = F.aggregate(
-        F.zip_with("v", "q", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    rw = W.partitionBy("probe_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        short.join(scan.select("vec_id", "v"), "vec_id")
-        .join(F.broadcast(p), "probe_id")
-        .select("probe_id", "vec_id", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-    )
+    adc = _ivfpq_adc(probe_cells, cb, scan, w, n_subspaces)
+    # the exact rerank reads floats from the SAME pruned partitioned scan
+    return _shortlist_rerank(adc, scan.select("vec_id", "v"), p, shortlist, k)
 
 
 def mmr_rerank(
@@ -1682,39 +1460,9 @@ def ivf_pq_append(
     documented trade (same as every frozen-quantizer ANN index) —
     periodic rebuild is the compaction analog."""
     cents = spark.read.parquet(f"{index_dir}/centroids")
-    cb = spark.read.parquet(f"{index_dir}/codebooks")
-    n_subspaces = cb.select(F.max("sub_id")).first()[0] + 1
-    w = len(cb.select("cv").first()[0])
-    unit = F.transform("raw", lambda x: x / F.col("nv"))
-    v = (
-        spread(
-            corpus.select(
-                F.col(id_col).alias("vec_id"),
-                as_double_vec(F.col(vec_col)).alias("raw"),
-            )
-        )
-        .withColumn("nv", norm(F.col("raw")))
-        .filter(F.col("nv") > 0)
-        .select("vec_id", unit.alias("v"))
-    )
-    assigned, codes = _ivfpq_encode(v, cents, cb, w, n_subspaces)
-    if os.environ.get("SPARK_GRAFT_OPT_IVFPQ", "1") == "0":
-        # pre-r13 rows-form codes: pack one sub_id-ordered array per
-        # vector via groupBy (kept for A/B)
-        packed = (
-            codes.groupBy("vec_id", "cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub_id", "code"))),
-                    lambda s: s["code"],
-                ).alias("codes")
-            )
-            .join(assigned.select("vec_id", "v"), "vec_id")
-        )
-    else:
-        # r13 fused encode already yields the sub_id-ordered code array
-        # per vector — the packing groupBy (and its exchange) is gone
-        packed = codes.join(assigned.select("vec_id", "v"), "vec_id")
+    cb, n_subspaces, w = _read_pq_codebook(spark, index_dir)
+    v = _unit_corpus(corpus, vec_col, id_col)
+    packed = _ivfpq_packed(v, cents, cb, w, n_subspaces)
     packed.write.mode("append").partitionBy("cell").parquet(
         f"{index_dir}/codes"
     )

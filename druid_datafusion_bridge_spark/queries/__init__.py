@@ -11,6 +11,11 @@ a recall bound or an rsd flag, not left rows-only).
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 from typing import Any
 
@@ -36,102 +41,85 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The grading driver samples the FIRST 50 registry entries in
-# registration order. r1-r5 rotated at MODULE granularity; r6-r7 rotated
-# at ENTRY granularity and retired the never-sampled backlog: after
-# r7's driver run EVERY registry entry has at least one driver
-# correctness row, so since r8 the window's job is keeping the evidence
-# FRESH. r13 ROTATION (fixed at round-13 start, 2026-08-18, continuing
-# the staleness policy adjudicated r8-r12): round 13 is an OPTIMIZATION
-# round and registers no new queries (NEW_IN_R13 stays empty), so every
-# slot is a DELIBERATE RE-SAMPLE of the entries whose newest driver
-# rows are oldest after CORRECTNESS_r12 landed — the 35 remaining
-# r7-evidence entries (the block squeezed out of the r12 window plus
-# the r7 rows never refreshed since), then the first 15 of the 50
-# r8-evidence entries, each block in registry order. Entries squeezed
-# out here (the r8 tail) stay the stalest and lead r14's window.
-NEW_IN_R13: tuple[str, ...] = ()
+# An external correctness check runs the FIRST ``WINDOW`` entries of
+# all_queries() (``__spark_entry__.queries()``) against their oracles
+# and records one row per query in CORRECTNESS_r<N>.json beside the
+# package. Every entry already has such a row, so the window's job is
+# to keep that evidence fresh: the queries whose code the current change
+# edits come first, then the entries whose newest row is oldest.
+WINDOW = 50
 
-# Re-samples ordered by evidence age (oldest driver row first), computed
-# from the union of CORRECTNESS_r01–r12 at round-13 start.
-STALE_RESAMPLES: tuple[str, ...] = (
-    # newest driver row is r7 — all 35 remaining, registry order
-    "txp_vocab_coverage",
-    "txp_trigram_familiarity",
-    "txp_token_budget",
-    "em_binary_quantize",
-    "an_event_transitions",
-    "s12_orc_sink_roundtrip",
-    "s1k_druid_segment_prefix_filter",
-    "dm_segment_stats_plane",
-    "s1l_druid_segment_regex_filter",
-    "s1m_druid_segment_search_filter",
-    "s1n_druid_segment_like_filter",
-    "dm_search_query",
-    "s1o_druid_segment_split_scan",
-    "s1p_druid_segment_ordered_limit",
-    "s1q_druid_segment_recent_limit",
-    "lr_retention_drop_interval",
-    "lr_retention_period_load",
-    "lr_retention_drop_before",
-    "dd_lsh_verified_pairs",
-    "fd_mv_sql_text",
-    "fd_lookup_sql_text",
-    "fd_window_sql_text",
+# Registry queries whose code the current change edits. Replace, do not
+# extend, with each change; the window fills the rest by itself.
+CHANGED: tuple[str, ...] = (
+    "a9_approx_count_distinct",
+    "prof_column_stats",
+    "txt_token_stats",
     "sim_pq_adc_topk",
-    "nq_timeseries_zerofill",
-    "nq_groupby_subtotals",
-    "nq_groupby_filtered_limit",
-    "nq_topn_daily_revenue",
-    "nq_scan_filtered",
-    "nq_search_digits",
-    "nq_join_datasource",
-    "nq_ingest_spec_rollup",
-    "nq_time_boundary",
-    "nq_period_granularity_tz",
-    "nq_union_datasource",
-    "nq_datasource_metadata",
-    # newest driver row is r8 — first 15 in registry order, to window
-    # capacity (the r8 tail leads r14's window)
-    "txp_quality_median_cut",
-    "an_top_paths",
-    "s1b_druid_segment_scan",
-    "mv_tag_counts",
-    "s1c_druid_segment_time_prune",
-    "s1d_druid_segment_dim_filter",
-    "s2b_segment_compaction",
-    "s2c_schema_evolution_scan",
-    "cx_hll_rollup_merge",
-    "lr_retention_load_interval_overlap",
-    "s13_version_overshadow_scan",
-    "dm_rollup_pt15m",
-    "dm_rollup_hour_multi",
-    "dm_time_boundary",
-    "dm_info",
+    "sim_ivfpq_topk",
+    "sim_ivfpq_persisted",
+    "sim_ivfpq_append",
 )
 
-ROTATION: tuple[str, ...] = (NEW_IN_R13 + STALE_RESAMPLES)[:50]
+_ARTIFACT_DIR = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 
-def _apply_rotation() -> None:
-    """Reorder QUERIES/ORACLES so ROTATION's names occupy the first
-    slots (plan order), everything else following in registration
-    order. Idempotent; unknown names are a loud error so the list can't
-    silently rot when a query is renamed."""
-    missing = [n for n in ROTATION if n not in QUERIES]
+def sampled_rounds(root: str = _ARTIFACT_DIR) -> dict[str, int]:
+    """Each query's newest sampled round N, read from every
+    CORRECTNESS_r<N>.json in ``root``."""
+    latest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
+            continue
+        with open(path, encoding="utf-8") as f:
+            for name in json.load(f):
+                latest[name] = max(latest.get(name, 0), int(m.group(1)))
+    return latest
+
+
+def plan_rotation(
+    registered: list[str], latest: dict[str, int]
+) -> tuple[str, ...]:
+    """The sample window: CHANGED first, then the oldest newest sampled
+    round (a never-sampled query counts as round 0), each in
+    registration order, up to WINDOW names. With no CORRECTNESS
+    artifacts the window is empty and the registry keeps registration order.
+    Unknown CHANGED names are a loud error so the list cannot silently
+    rot when a query is renamed."""
+    missing = [n for n in CHANGED if n not in registered]
     if missing:
-        raise ValueError(f"ROTATION names not in registry: {missing}")
-    rot = set(ROTATION)
-    order = list(ROTATION) + [n for n in QUERIES if n not in rot]
-    for d in (QUERIES, ORACLES):
-        reordered = {n: d[n] for n in order if n in d}
-        d.clear()
-        d.update(reordered)
+        raise ValueError(f"CHANGED names not in registry: {missing}")
+    if not latest:
+        return ()
+    changed = [n for n in registered if n in CHANGED]
+    # sorted() is stable: equal rounds stay in registration order
+    rest = sorted(
+        (n for n in registered if n not in CHANGED),
+        key=lambda n: latest.get(n, 0),
+    )
+    return tuple(changed + rest)[:WINDOW]
+
+
+@functools.cache
+def rotation() -> tuple[str, ...]:
+    """plan_rotation over the full registry and the CORRECTNESS
+    artifacts, computed once per process."""
+    load_all()
+    return plan_rotation(list(QUERIES), sampled_rounds())
+
+
+def _apply_rotation(d: dict[str, Any]) -> dict[str, Any]:
+    """A copy of ``d`` with rotation()'s names first, everything else
+    following in registration order."""
+    head = {n: d[n] for n in rotation() if n in d}
+    return head | {n: v for n, v in d.items() if n not in head}
 
 
 def load_all() -> None:
-    """Import every query module so registration side-effects run, then
-    apply the driver-sample ROTATION (see its comment)."""
+    """Import every query module so registration side-effects run."""
     from . import (  # noqa: F401
         text_pipeline,
         multimodal,
@@ -160,17 +148,16 @@ def load_all() -> None:
         native,
     )
 
-    _apply_rotation()
-
 
 def all_queries() -> dict[str, QueryFn]:
+    """Every registered query, in sample-window order (rotation())."""
     load_all()
-    return dict(QUERIES)
+    return _apply_rotation(QUERIES)
 
 
 def all_oracles() -> dict[str, str]:
     load_all()
-    return dict(ORACLES)
+    return _apply_rotation(ORACLES)
 
 
 def run(spark: SparkSession, name: str, sf_dir: str) -> Any:

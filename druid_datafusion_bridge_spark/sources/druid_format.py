@@ -72,6 +72,8 @@ def lz4_block_decompress(src: bytes, out_size: int) -> bytes:
         lit_len = token >> 4
         if lit_len == 15:
             while True:
+                if i >= n:
+                    raise DruidFormatError("LZ4: truncated literal length")
                 b = src[i]
                 i += 1
                 lit_len += b
@@ -81,6 +83,8 @@ def lz4_block_decompress(src: bytes, out_size: int) -> bytes:
         i += lit_len
         if i >= n:
             break  # final sequence carries literals only
+        if i + 2 > n:
+            raise DruidFormatError("LZ4: truncated match offset")
         offset = src[i] | (src[i + 1] << 8)
         i += 2
         if offset == 0:
@@ -88,6 +92,8 @@ def lz4_block_decompress(src: bytes, out_size: int) -> bytes:
         match_len = (token & 0x0F) + 4
         if (token & 0x0F) == 0x0F:
             while True:
+                if i >= n:
+                    raise DruidFormatError("LZ4: truncated match length")
                 b = src[i]
                 i += 1
                 match_len += b

@@ -220,6 +220,15 @@ def test_corrupt_and_unknown_compression_errors():
             fmt.decompress_block(strat, b"xx", 2)
     with pytest.raises(fmt.DruidFormatError):
         fmt.decompress_block(0x7A, b"xx", 2)
+    # LZ4 blocks truncated inside the literal-length extension, the
+    # 2-byte match offset and the match-length extension
+    for block in (
+        bytes([0x10, 0x41, 0x01]),
+        bytes([0xF0]),
+        bytes([0x1F, 0x41, 0x01, 0x00]),
+    ):
+        with pytest.raises(fmt.DruidFormatError):
+            fmt.lz4_block_decompress(block, 64)
 
 
 # --- String column --------------------------------------------------------

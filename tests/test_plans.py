@@ -8,6 +8,7 @@ broadcast, and bucketed fact-fact joins running with zero exchanges.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from druid_datafusion_bridge_spark.catalog import table
@@ -289,7 +290,8 @@ def test_training_pipeline_plan_shapes(spark):
       grown 3rd branch, a join, or a broadcast of the band table would
       move these counts and gets caught here;
     - repetition signals: two aggregation exchanges (doc+token, doc),
-      nothing else."""
+      nothing else;
+    - token stats run no regexp_replace."""
     from druid_datafusion_bridge_spark.plans import formatted_plan
 
     qs = all_queries()
@@ -310,6 +312,12 @@ def test_training_pipeline_plan_shapes(spark):
 
     rep = qs["txp_repetition"](spark, SF_DIR)
     assert count_exchanges(rep) == 2
+
+    # token stats extract the token array once and count spaces and
+    # punctuation with translate(): no regex replacement pass per row
+    tok = qs["txt_token_stats"](spark, SF_DIR)
+    plan = tok._jdf.queryExecution().executedPlan().toString()
+    assert "regexp_replace" not in plan, plan
 
 
 def test_druid_sql_udfs_stay_jvm_side(spark):
@@ -350,12 +358,16 @@ def test_every_query_compiles_jvm_side(spark):
     assert not offenders, offenders
 
 
-def test_a12_distinct_rollup_has_no_expand(spark):
-    """a12 counts distinct users alongside plain aggregates; the naive
-    countDistinct formulation makes Spark insert an Expand node that
-    doubles every input row before the shuffle. The two-level rewrite
-    must keep the plan Expand-free."""
-    df = all_queries()["a12_time_bucket"](spark, SF_DIR)
+@pytest.mark.parametrize(
+    "name", ["a12_time_bucket", "a9_approx_count_distinct"]
+)
+def test_a12_distinct_rollup_has_no_expand(spark, name):
+    """a12 counts distinct users alongside plain aggregates, a9 an exact
+    distinct beside an HLL sketch; the naive countDistinct formulation
+    makes Spark insert an Expand node that duplicates every input row
+    before the shuffle. The dedup-first rewrites must keep the plan
+    Expand-free."""
+    df = all_queries()[name](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Expand" not in plan
 

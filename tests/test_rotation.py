@@ -1,99 +1,85 @@
-"""Pin the driver-sample rotation: the grading driver runs the FIRST 50
-registry entries in registration order. Since r6 the rotation is
-ENTRY-level (queries/__init__.py ROTATION). After r7 the never-sampled
-backlog is ZERO — every registry entry has at least one driver
-correctness row — so since r8 the rotation follows a STALENESS policy:
-the round's own new queries (never sampled) take priority slots, and
-the rest of the window deliberately RE-SAMPLES the entries whose newest
-driver rows are oldest, refreshing the evidence that ages a round
-further each cycle. r13 registers no new queries (optimization round),
-so the window is pure re-samples: the 35 remaining r7-evidence entries
-(the block squeezed out of the r12 window plus the never-refreshed r7
-rows), then the first 15 r8-evidence entries, each block in registry
-order. An accidental reorder would silently burn the round's slots on
-freshly-green queries — this test makes that a loud failure.
-
-UPDATE DELIBERATELY each rotation, together with ROTATION itself."""
+"""Pin the sample-window rotation: the external correctness check runs
+the FIRST WINDOW entries of all_queries(). The policy (queries/__init__.py
+plan_rotation): the queries whose code the current change edits
+(CHANGED) come first, then the entries whose newest correctness row
+(CORRECTNESS_r<N>.json) is oldest, each block in registration order. These tests re-derive that policy's invariants from their own
+reading of the artifacts, so a reordered or hand-edited window fails
+here without any per-round constant to update."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
+
 from druid_datafusion_bridge_spark.queries import (
-    NEW_IN_R13,
-    ROTATION,
-    STALE_RESAMPLES,
+    CHANGED,
+    QUERIES,
+    WINDOW,
     all_queries,
+    load_all,
+    plan_rotation,
+    rotation,
 )
 
-CURRENT_ROUND = 13
-# Entries whose newest driver row is from a round <= this are "stale"
-# and eligible for a deliberate re-sample slot this round. At r13 start
-# the oldest evidence is r7 (35 rows) then r8 (50 rows).
-STALE_THRESHOLD = 8
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _newest_sampled_rounds() -> dict[str, int]:
+    latest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m:
+            with open(path, encoding="utf-8") as f:
+                for name in json.load(f):
+                    latest[name] = max(latest.get(name, 0), int(m.group(1)))
+    return latest
 
 
 def test_driver_sample_window_matches_rotation_plan():
     names = list(all_queries())
-    assert len(ROTATION) == 50  # backlog is zero; fill every slot
-    # the window prefix IS the plan, in plan order
-    assert names[: len(ROTATION)] == list(ROTATION)
-    # no new queries this round: the window is pure staleness re-samples
-    assert NEW_IN_R13 == ()
-    assert list(ROTATION) == (list(NEW_IN_R13) + list(STALE_RESAMPLES))[:50]
-    # spot-pin the staleness ordering: the r7 block heads the re-samples
-    assert STALE_RESAMPLES[:3] == (
-        "txp_vocab_coverage",
-        "txp_trigram_familiarity",
-        "txp_token_budget",
-    )
-    # the r8 block starts right after the 35 r7 rows
-    assert STALE_RESAMPLES[35] == "txp_quality_median_cut"
-    # spot-pins drawn from the FRONT of the stale list so they stay in
-    # the window even if a NEW_IN_R13 entry ever squeezes the tail
-    for must in ("txp_vocab_coverage", "dd_lsh_verified_pairs",
-                 "sim_pq_adc_topk", "nq_timeseries_zerofill",
-                 "lr_retention_drop_interval", "dm_search_query"):
-        assert must in ROTATION, must
+    registered = list(QUERIES)  # registration order: QUERIES is never reordered
+    assert sorted(names) == sorted(registered)
+    window = list(rotation())
+    # the registry prefix IS the window, and it fills every slot
+    assert names[: len(window)] == window
+    if not _newest_sampled_rounds():  # checkout without CORRECTNESS artifacts
+        assert window == [] and names == registered
+        return
+    assert len(window) == WINDOW
+    # every CHANGED name is registered and leads, in registration order
+    assert set(CHANGED) <= set(registered)
+    assert window[: len(CHANGED)] == [n for n in registered if n in CHANGED]
 
 
 def test_rotation_wastes_no_window_slot():
-    """No window slot may re-sample a query that already has a driver
-    correctness row (CORRECTNESS_r*.json) unless listed as a deliberate
-    re-sample — re-sampling green queries burns the round's evidence.
-    r13 policy: STALE_RESAMPLES *is* the deliberate re-sample list — the
-    backlog of never-sampled entries is zero, so the window's job is to
-    refresh the OLDEST driver evidence (r7–r8 rows). Anything sampled
-    in the window must be either brand-new (NEW_IN_R13) or a declared
-    stale re-sample. NEW_IN_R13 entries are exempt even after this
-    round's own driver artifact lands (ADVICE r9: the current round's
-    artifact must not retroactively mark its own new queries wasted)."""
-    import glob
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
-    if not files:  # fresh checkout without driver artifacts
+    """No window slot may re-sample fresher evidence than a query left
+    outside: every non-CHANGED query in the window has a newest sampled
+    round no later than any query outside it (never sampled counts as
+    round 0), and within one round the window keeps registration
+    order."""
+    latest = _newest_sampled_rounds()
+    if not latest:
         return
-    latest: dict[str, int] = {}
-    for f in files:
-        rnd = int(os.path.basename(f).split("_r")[1].split(".")[0])
-        with open(f, encoding="utf-8") as fh:
-            for name in json.load(fh):
-                latest[name] = max(latest.get(name, 0), rnd)
-    deliberate = set(STALE_RESAMPLES) | set(NEW_IN_R13)
-    names = list(all_queries())
-    wasted = [
-        n for n in names[: len(ROTATION)]
-        if n in latest and n not in deliberate
-    ]
-    assert not wasted, wasted
-    # and the declared re-samples must actually BE stale (driver row
-    # r8 or older) — re-declaring fresh entries would defeat the policy.
-    # Rows from rounds AFTER the current one (the driver's post-round
-    # artifact for CURRENT_ROUND itself) are the designed tripwire
-    # ordering the next flip: once CORRECTNESS_r13.json lands, the
-    # refreshed re-samples go red here until r14 rewrites ROTATION.
-    not_stale = [
-        n for n in STALE_RESAMPLES if latest.get(n, 0) > STALE_THRESHOLD
-    ]
-    assert not not_stale, not_stale
+    load_all()
+    registered = list(QUERIES)
+    pos = {n: i for i, n in enumerate(registered)}
+    window = list(rotation())
+    resampled = [n for n in window if n not in CHANGED]
+    outside = [n for n in registered if n not in window]
+    assert all(n not in CHANGED for n in outside)
+    if outside:
+        newest_inside = max(latest.get(n, 0) for n in resampled)
+        oldest_outside = min(latest.get(n, 0) for n in outside)
+        assert newest_inside <= oldest_outside, (newest_inside, oldest_outside)
+    rounds = [latest.get(n, 0) for n in resampled]
+    assert rounds == sorted(rounds), "re-samples must run stalest first"
+    for rnd in set(rounds):
+        block = [n for n in resampled if latest.get(n, 0) == rnd]
+        assert block == sorted(block, key=pos.__getitem__), rnd
+
+
+def test_rotation_without_artifacts_keeps_registration_order():
+    load_all()
+    assert plan_rotation(list(QUERIES), {}) == ()

@@ -390,6 +390,46 @@ def test_ivfpq_append_serves_new_vectors(spark, tmp_path):
     assert top["vec_id"] == 250 and top["sim"] > 0.999
 
 
+def test_ivfpq_rejects_noncontiguous_codebook(spark, tmp_path):
+    """The packed ADC LUT is indexed by code value, so a persisted
+    codebook whose codes are not 0..k-1 in every subspace would yield
+    NULL distances and a silent mis-ranking. Both readers of a
+    persisted index must refuse it instead."""
+    import numpy as np
+
+    from druid_datafusion_bridge_spark.operators.similarity import (
+        ivf_pq_append,
+        ivf_pq_build,
+        ivf_pq_query,
+    )
+
+    rs = np.random.RandomState(5)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rs.normal(size=64)]) for i in range(200)],
+        "vec_id long, embedding array<double>",
+    )
+    idx = str(tmp_path / "idx")
+    ivf_pq_build(emb, idx, n_centroids=4, n_subspaces=8)
+    # renumber one code of subspace 3 past the end: codes 0..14, 16
+    cb = spark.read.parquet(f"{idx}/codebooks").collect()
+    k = max(r["code"] for r in cb if r["sub_id"] == 3) + 1
+
+    def renumbered(r):
+        return k if (r["sub_id"], r["code"]) == (3, k - 1) else r["code"]
+
+    edited = [(r["sub_id"], renumbered(r), r["cv"]) for r in cb]
+    spark.createDataFrame(
+        edited, "sub_id int, code int, cv array<double>"
+    ).write.mode("overwrite").parquet(f"{idx}/codebooks")
+    probe = emb.filter("vec_id = 0").selectExpr(
+        "vec_id + 1000 AS probe_id", "embedding AS probe_vec"
+    )
+    with pytest.raises(ValueError, match="codebooks"):
+        ivf_pq_query(spark, idx, probe, k=3, nprobe=2)
+    with pytest.raises(ValueError, match="codebooks"):
+        ivf_pq_append(spark, idx, emb.filter("vec_id < 10"))
+
+
 def test_ivfpq_cache_dir_fallback_on_unusable_base(monkeypatch, tmp_path):
     """An unusable shared cache base (here: a FILE squatting the
     ddbs_ivfpq path — permission bits don't stop root, which this

@@ -1,8 +1,9 @@
 """Capture .explain('formatted') for headline (or named) queries into
-plans/r12/<query>_<tag>.txt — the optimization round's plan evidence.
+plans/<round>/<query>_<tag>.txt — a change's before/after plan evidence.
 
-Usage: python tools_r12/capture_plans.py <tag> [query ...]
-(tag is 'before' or 'after'; default query set = bench.py HEADLINE).
+Usage: python tools/capture_plans.py <round> <tag> [query ...]
+(round names the directory, e.g. r14; tag is 'before' or 'after';
+default query set = bench.py HEADLINE).
 """
 
 from __future__ import annotations
@@ -19,13 +20,17 @@ from druid_datafusion_bridge_spark.queries import all_queries  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or list(HEADLINE)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    rnd, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or list(HEADLINE)
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_SF_DIR", os.path.expanduser("~/testdata/sf0.1")
+    )
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r12",
+        rnd,
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="ddbs-capture-plans")

@@ -3,10 +3,10 @@ timed run each) — the checklist instrument for the optimization round:
 which of the 285 query paths actually cost anything.
 
 Prints one JSON line {"queries": {name: sec}, "total": sec} sorted by
-descending time. Not a grading artifact — a builder's profiling tool
-(bench.py stays the number of record).
+descending time. A profiling aid, not a benchmark: speed claims are
+judged by BENCHMARK.json's parent-vs-change runs.
 
-Usage: python tools_r13/time_registry.py [out.json]
+Usage: python tools/time_registry.py [out.json]
 """
 
 from __future__ import annotations
@@ -24,7 +24,9 @@ from druid_datafusion_bridge_spark.queries import all_queries  # noqa: E402
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_SF_DIR", os.path.expanduser("~/testdata/sf0.1")
+    )
     spark = get_spark(app_name="ddbs-time-registry")
     build_scan_mirrors(spark, sf_dir)
     qs = all_queries()
