@@ -52,13 +52,21 @@ WINDOW = 50
 # Registry queries whose code the current change edits. Replace, do not
 # extend, with each change; the window fills the rest by itself.
 CHANGED: tuple[str, ...] = (
-    "a9_approx_count_distinct",
-    "prof_column_stats",
-    "txt_token_stats",
-    "sim_pq_adc_topk",
-    "sim_ivfpq_topk",
-    "sim_ivfpq_persisted",
-    "sim_ivfpq_append",
+    "s1b_druid_segment_scan",
+    "s1c_druid_segment_time_prune",
+    "s1d_druid_segment_dim_filter",
+    "s1e_druid_segment_zstd_scan",
+    "s1f_druid_segment_in_filter",
+    "s1g_druid_segment_mvd_in_filter",
+    "s1i_druid_segment_dim_bound_filter",
+    "s1k_druid_segment_prefix_filter",
+    "s1h_druid_segment_metric_prune",
+    "s1l_druid_segment_regex_filter",
+    "s1m_druid_segment_search_filter",
+    "s1n_druid_segment_like_filter",
+    "s1o_druid_segment_split_scan",
+    "s1p_druid_segment_ordered_limit",
+    "s1q_druid_segment_recent_limit",
 )
 
 _ARTIFACT_DIR = os.path.dirname(

@@ -1,4 +1,4 @@
-"""Druid v9 segment binary codecs — pure Python, read AND write.
+"""Druid v9 segment binary codecs, read AND write.
 
 Format authority is the reference implementation (all cites are files
 under /root/reference): smoosh archive (src/segment/smoosh.rs:27-131),
@@ -19,11 +19,10 @@ round-trip tests can verify the read side bit-exactly, mirroring the
 reference's build-then-parse unit-test style
 (generic_indexed.rs:258-299, vsize_ints.rs:118-131).
 
-No lz4 library ships in this container, so LZ4 *block* format (not
-frame) is implemented here: a full decompressor, and a valid
-literal-only compressor for the write side. ZSTD blocks (standard
-zstd frames, as zstd-jni writes them) go through Arrow's bundled
-zstd codec — both directions, real compression.
+LZ4 blocks (raw block format, not frame) and ZSTD blocks (standard
+zstd frames, as zstd-jni writes them) go through the codecs Arrow
+bundles, in both directions with real compression. LZF, which Arrow
+lacks, and every container layout are decoded here in Python.
 """
 
 from __future__ import annotations
@@ -35,6 +34,7 @@ import struct
 from dataclasses import dataclass, field
 
 import numpy as np
+import pyarrow as pa
 
 SEGMENT_VERSION_V9 = 9
 
@@ -58,83 +58,38 @@ class DruidFormatError(ValueError):
 
 
 # ---------------------------------------------------------------------------
-# LZ4 block codec (raw block format, no frame header)
+# Block codecs. LZ4 and ZSTD go through the codecs Arrow ships: Druid's
+# LZ4 strategy stores raw LZ4 blocks (no frame header), the layout of
+# Arrow's "lz4_raw"; its ZSTD strategy stores standard zstd frames
+# (zstd-jni `Zstd.compress`). Arrow has no LZF, so LZF is decoded here.
 # ---------------------------------------------------------------------------
 
+_ARROW_CODECS = {LZ4: pa.Codec("lz4_raw"), ZSTD: pa.Codec("zstd")}
 
-def lz4_block_decompress(src: bytes, out_size: int) -> bytes:
-    """Decompress one raw LZ4 block to exactly out_size bytes."""
-    dst = bytearray()
-    i, n = 0, len(src)
-    while i < n and len(dst) < out_size:
-        token = src[i]
-        i += 1
-        lit_len = token >> 4
-        if lit_len == 15:
-            while True:
-                if i >= n:
-                    raise DruidFormatError("LZ4: truncated literal length")
-                b = src[i]
-                i += 1
-                lit_len += b
-                if b != 255:
-                    break
-        dst += src[i : i + lit_len]
-        i += lit_len
-        if i >= n:
-            break  # final sequence carries literals only
-        if i + 2 > n:
-            raise DruidFormatError("LZ4: truncated match offset")
-        offset = src[i] | (src[i + 1] << 8)
-        i += 2
-        if offset == 0:
-            raise DruidFormatError("LZ4: zero match offset")
-        match_len = (token & 0x0F) + 4
-        if (token & 0x0F) == 0x0F:
-            while True:
-                if i >= n:
-                    raise DruidFormatError("LZ4: truncated match length")
-                b = src[i]
-                i += 1
-                match_len += b
-                if b != 255:
-                    break
-        start = len(dst) - offset
-        if start < 0:
-            raise DruidFormatError("LZ4: match offset before block start")
-        if offset >= match_len:
-            dst += dst[start : start + match_len]
-        else:  # overlapping match (run-length style) — copy byte-wise
-            for j in range(match_len):
-                dst.append(dst[start + j])
-    if len(dst) != out_size:
+# every LZ4 sequence spends at least one input byte per 255 output bytes
+_LZ4_MAX_EXPANSION = 255
+
+
+def _check_lz4_size(block: bytes, out_size: int) -> None:
+    """Raise unless the raw LZ4 block decodes to exactly out_size bytes.
+
+    Arrow returns out_size bytes even for a block that decodes to
+    fewer, with the tail left uninitialised. A block fills out_size
+    only if it does not also fit in out_size - 1 bytes. The one block
+    that decodes to nothing is the lone empty-literals token."""
+    if out_size == 0:
+        if block != b"\x00":
+            raise DruidFormatError("LZ4: block does not decode to 0 bytes")
+        return
+    if out_size > _LZ4_MAX_EXPANSION * len(block):
         raise DruidFormatError(
-            f"LZ4: decompressed {len(dst)} bytes, expected {out_size}"
+            f"LZ4: {len(block)}-byte block cannot decode to {out_size} bytes"
         )
-    return bytes(dst)
-
-
-def lz4_block_compress_literal(data: bytes) -> bytes:
-    """Encode data as a single literal-only LZ4 sequence (valid, ratio 1).
-
-    A block may end with a literals-only sequence, so one sequence with
-    no match part is a legal block — any LZ4 decoder (including
-    lz4_block_decompress above and the reference's lz4_flex,
-    compression/mod.rs:41) accepts it.
-    """
-    n = len(data)
-    out = bytearray()
-    if n < 15:
-        out.append(n << 4)
-    else:
-        out.append(0xF0)
-        rem = n - 15
-        while rem >= 255:
-            out.append(255)
-            rem -= 255
-        out.append(rem)
-    out += data
-    return bytes(out)
+    try:
+        _ARROW_CODECS[LZ4].decompress(block, decompressed_size=out_size - 1)
+    except OSError:
+        return
+    raise DruidFormatError(f"LZ4: block decodes to fewer than {out_size} bytes")
 
 
 def lzf_raw_decompress(src: bytes | memoryview) -> bytes:
@@ -209,9 +164,9 @@ def lzf_chunks_decompress(src: bytes | memoryview, out_size: int) -> bytes:
 
 
 def lzf_chunks_compress_literal(raw: bytes) -> bytes:
-    """Literal-only Ning LZF chunk stream (type-0 chunks) — same
-    trade as lz4_block_compress_literal: spec-valid output any LZF
-    decoder accepts, no match search."""
+    """Literal-only Ning LZF chunk stream (type-0 chunks): spec-valid
+    output any LZF decoder accepts, with no match search (Arrow has no
+    LZF encoder to hand the job to)."""
     out = bytearray()
     for pos in range(0, len(raw), _LZF_CHUNK_MAX):
         chunk = raw[pos : pos + _LZF_CHUNK_MAX]
@@ -224,53 +179,33 @@ def lzf_chunks_compress_literal(raw: bytes) -> bytes:
     return bytes(out)
 
 
-def _zstd_codec():
-    """Arrow's bundled zstd codec, or None if this build lacks it.
-    Druid's ZSTD strategy stores standard zstd frames per block
-    (zstd-jni `Zstd.compress`), which any frame decoder reads."""
-    try:
-        import pyarrow as pa
-
-        return pa.Codec("zstd")
-    except Exception:
-        return None
-
-
 def decompress_block(strategy: int, compressed: bytes, out_size: int) -> bytes:
     """Block decode by strategy id. The reference supports LZ4 +
     uncompressed and ERRORS on LZF/ZSTD (compression/mod.rs:34-46);
     LZF and ZSTD are implemented here beyond reference parity so
     legacy-v1 (LZF) and modern production (ZSTD) Druid columns decode
     too."""
-    if strategy == LZ4:
-        return lz4_block_decompress(compressed, out_size)
+    codec = _ARROW_CODECS.get(strategy)
+    if codec is not None:
+        if strategy == LZ4:
+            _check_lz4_size(compressed, out_size)
+        try:
+            return codec.decompress(compressed, decompressed_size=out_size, asbytes=True)
+        except OSError as exc:
+            raise DruidFormatError(f"{codec.name}: corrupt block ({exc})") from exc
     if strategy == LZF:
         return lzf_chunks_decompress(compressed, out_size)
-    if strategy == ZSTD:
-        codec = _zstd_codec()
-        if codec is None:
-            raise DruidFormatError("ZSTD block but no zstd codec available")
-        try:
-            out = codec.decompress(bytes(compressed), decompressed_size=out_size)
-        except Exception as exc:
-            raise DruidFormatError(f"ZSTD: corrupt block ({exc})") from exc
-        return out.to_pybytes() if hasattr(out, "to_pybytes") else bytes(out)
     if strategy in (UNCOMPRESSED, NONE):
         return bytes(compressed)
     raise DruidFormatError(f"Unsupported compression strategy {strategy:#x}")
 
 
 def compress_block(strategy: int, raw: bytes) -> bytes:
-    if strategy == LZ4:
-        return lz4_block_compress_literal(raw)
+    codec = _ARROW_CODECS.get(strategy)
+    if codec is not None:
+        return codec.compress(raw, asbytes=True)
     if strategy == LZF:
         return lzf_chunks_compress_literal(raw)
-    if strategy == ZSTD:
-        codec = _zstd_codec()
-        if codec is None:
-            raise DruidFormatError("ZSTD write but no zstd codec available")
-        out = codec.compress(bytes(raw))
-        return out.to_pybytes() if hasattr(out, "to_pybytes") else bytes(out)
     if strategy in (UNCOMPRESSED, NONE):
         return bytes(raw)
     raise DruidFormatError(f"Unsupported compression strategy {strategy:#x}")
@@ -319,6 +254,10 @@ class GenericIndexedV1:
         (self.total_bytes,) = _I32.unpack_from(data, base + 2)
         (self.num_elements,) = _I32.unpack_from(data, base + 6)
         self.values_start = base + GI_HEADER_SIZE + self.num_elements * 4
+        if self.num_elements < 0 or self.values_start > len(data):
+            raise DruidFormatError(
+                f"GenericIndexed: {self.num_elements} offsets overflow buffer"
+            )
 
     def __len__(self) -> int:
         return self.num_elements
@@ -336,7 +275,7 @@ class GenericIndexedV1:
     def get(self, i: int) -> bytes | None:
         """Length-prefixed element; length == -1 means null."""
         start, end = self._range(i)
-        if end > len(self.data):
+        if start < self.values_start or end < start + 4 or end > len(self.data):
             raise DruidFormatError(f"GenericIndexed: element {i} overflows buffer")
         (length,) = _I32.unpack_from(self.data, start)
         if length < 0:
@@ -347,7 +286,7 @@ class GenericIndexedV1:
 
     def get_str(self, i: int) -> str | None:
         v = self.get(i)
-        return None if v is None else v.decode("utf-8")
+        return None if v is None else _utf8(v, i)
 
     def get_object_string(self, i: int) -> str | None:
         """ObjectStrategy variant: [4 zero bytes][utf8]; empty => null
@@ -357,7 +296,7 @@ class GenericIndexedV1:
         if len(raw) < 4 or raw[:4] != b"\x00\x00\x00\x00":
             raise DruidFormatError(f"GenericIndexed: bad ObjectStrategy prefix at {i}")
         s = raw[4:]
-        return s.decode("utf-8") if s else None
+        return _utf8(s, i) if s else None
 
     def total_size(self) -> int:
         """Bytes consumed from self.base — for sequential compound parsing."""
@@ -376,8 +315,6 @@ class GenericIndexedV1:
         dictionary-predicate evaluation; this path is O(bytes) in C.
         Layout per element: [len i32 BE][utf8], len == -1 => null
         (same wire format get() reads one element of)."""
-        import pyarrow as pa
-
         n = self.num_elements
         if n == 0:
             return pa.array([], type=pa.string())
@@ -426,8 +363,18 @@ class GenericIndexedV1:
             ],
             null_count=int(null_mask.sum()),
         )
-        arr.validate(full=True)  # utf8 well-formedness (C-side)
+        try:
+            arr.validate(full=True)  # utf8 well-formedness (C-side)
+        except pa.ArrowInvalid as exc:
+            raise DruidFormatError(f"GenericIndexed: {exc}") from exc
         return arr
+
+
+def _utf8(raw: bytes, i: int) -> str:
+    try:
+        return raw.decode("utf-8")
+    except UnicodeDecodeError as exc:
+        raise DruidFormatError(f"GenericIndexed: element {i} is not UTF-8") from exc
 
 
 def write_generic_indexed(elements: list[bytes | None], sorted_flag: bool = True) -> bytes:
@@ -575,6 +522,14 @@ def _read_compressed_blocks(
     else:
         raise DruidFormatError(f"Compressed column: unsupported version {version:#x}")
     blocks = GenericIndexedV1(data, pos)
+    if total_size < 0 or (
+        total_size
+        and not (len(blocks) - 1) * size_per <= total_size <= len(blocks) * size_per
+    ):
+        raise DruidFormatError(
+            f"Compressed column: {len(blocks)} blocks of {size_per} values "
+            f"cannot hold {total_size}"
+        )
     # sliced output is assembled by assignment, so make it NATIVE-endian
     # (pyarrow rejects byte-swapped arrays); the big-endian source
     # values convert on assignment
@@ -689,10 +644,13 @@ def parse_column_header(data) -> tuple[dict, int]:
     if len(data) < 4:
         raise DruidFormatError("Column data too short for header length")
     (json_len,) = _I32.unpack_from(data, 0)
-    if len(data) < 4 + json_len:
+    if json_len < 0 or len(data) < 4 + json_len:
         raise DruidFormatError("Column data too short for JSON header")
-    descriptor = json.loads(bytes(data[4 : 4 + json_len]).decode("utf-8"))
-    if "valueType" not in descriptor:
+    try:
+        descriptor = json.loads(bytes(data[4 : 4 + json_len]).decode("utf-8"))
+    except ValueError as exc:  # JSONDecodeError, UnicodeDecodeError
+        raise DruidFormatError(f"Column header is not JSON ({exc})") from exc
+    if not isinstance(descriptor, dict) or "valueType" not in descriptor:
         raise DruidFormatError("ColumnDescriptor missing valueType")
     return descriptor, 4 + json_len
 
@@ -809,6 +767,12 @@ def read_string_multi_column(data, base: int = 0):
     offsets = read_compressed_ints(data, pos)
     pos += _compressed_ints_size(data, pos)
     ids = read_compressed_ints(data, pos)
+    if len(offsets) and (
+        int(offsets[-1]) != len(ids) or np.any(np.diff(offsets.astype(np.int64)) < 0)
+    ):
+        raise DruidFormatError(
+            "Multi-value string column: row offsets do not partition the ids"
+        )
     return dictionary, offsets, ids
 
 
@@ -1251,14 +1215,17 @@ class SmooshReader:
     def __init__(self, segment_dir: str):
         self._dir = segment_dir
         meta_path = os.path.join(segment_dir, "meta.smoosh")
-        with open(meta_path, encoding="utf-8") as f:
-            lines = f.read().splitlines()
+        try:
+            with open(meta_path, encoding="utf-8") as f:
+                lines = f.read().splitlines()
+        except UnicodeDecodeError as exc:
+            raise DruidFormatError(f"meta.smoosh is not UTF-8 ({exc})") from exc
         if not lines:
             raise DruidFormatError("meta.smoosh is empty")
         header = lines[0].split(",")
         if len(header) < 3 or header[0] != "v1":
             raise DruidFormatError(f"Invalid meta.smoosh header: {lines[0]!r}")
-        self.num_chunks = int(header[2])
+        self.num_chunks = _meta_int(header[2], lines[0])
         self.entries: dict[str, tuple[int, int, int]] = {}
         for line in lines[1:]:
             line = line.strip()
@@ -1267,7 +1234,7 @@ class SmooshReader:
             parts = line.split(",")
             if len(parts) < 4:
                 raise DruidFormatError(f"Invalid meta.smoosh entry: {line!r}")
-            self.entries[parts[0]] = (int(parts[1]), int(parts[2]), int(parts[3]))
+            self.entries[parts[0]] = tuple(_meta_int(p, line) for p in parts[1:4])
         self._files: dict[int, object] = {}
         self._mmaps: dict[int, mmap.mmap] = {}
 
@@ -1277,7 +1244,10 @@ class SmooshReader:
                 raise DruidFormatError(f"Chunk {i} out of range")
             f = open(os.path.join(self._dir, f"{i:05d}.smoosh"), "rb")
             self._files[i] = f
-            self._mmaps[i] = mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
+            try:
+                self._mmaps[i] = mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
+            except ValueError as exc:  # an empty chunk file
+                raise DruidFormatError(f"Chunk {i}: {exc}") from exc
         return self._mmaps[i]
 
     def map_file(self, name: str) -> memoryview:
@@ -1285,7 +1255,7 @@ class SmooshReader:
             raise DruidFormatError(f"Logical file not found: {name}")
         chunk, start, end = self.entries[name]
         mm = self._chunk(chunk)
-        if end > len(mm):
+        if not 0 <= start <= end <= len(mm):
             raise DruidFormatError(f"File {name} end offset {end} exceeds chunk")
         return memoryview(mm)[start:end]
 
@@ -1297,9 +1267,22 @@ class SmooshReader:
 
     def close(self) -> None:
         for mm in self._mmaps.values():
-            mm.close()
+            try:
+                mm.close()
+            except BufferError:
+                # a view still points into the map (e.g. from the
+                # traceback of a decode error being raised); the map is
+                # released with that view instead
+                pass
         for f in self._files.values():
             f.close()
+
+
+def _meta_int(field: str, line: str) -> int:
+    try:
+        return int(field)
+    except ValueError:
+        raise DruidFormatError(f"Invalid meta.smoosh line: {line!r}") from None
 
 
 def write_smoosh(

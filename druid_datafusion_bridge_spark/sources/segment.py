@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import json
 import os
+import struct
 
 import numpy as np
 import pyarrow as pa
@@ -32,6 +33,17 @@ _VALUE_TYPE_TO_ARROW = {
     "DOUBLE": pa.float64(),
     "COMPLEX": pa.binary(),
 }
+
+
+def _dictionary_array(
+    ids: np.ndarray, dictionary: pa.Array, name: str
+) -> pa.DictionaryArray:
+    if len(ids) and int(ids.max()) >= len(dictionary):
+        raise fmt.DruidFormatError(
+            f"{name}: dictionary id {int(ids.max())} outside a "
+            f"{len(dictionary)}-entry dictionary"
+        )
+    return pa.DictionaryArray.from_arrays(pa.array(ids.astype(np.int32)), dictionary)
 
 
 class DruidSegment:
@@ -87,6 +99,13 @@ class DruidSegment:
         blocks), not O(segment). Multi-value strings are the one
         variable-width layout: their offsets+flat-ids decode fully and
         the row set applies as a take afterwards."""
+        try:
+            return self._decode_column(name, rows)
+        except (IndexError, struct.error) as exc:
+            # a header or offset read past the end of a truncated file
+            raise fmt.DruidFormatError(f"{name}: column data truncated") from exc
+
+    def _decode_column(self, name: str, rows: np.ndarray | None) -> pa.Array:
         data = self.smoosh.map_file(name)
         desc, payload = fmt.parse_column_header(data)
         vt = desc["valueType"].upper()
@@ -95,9 +114,7 @@ class DruidSegment:
             return pa.array(millis, type=pa.timestamp("ms"))
         if vt == "STRING" and desc.get("hasMultipleValues"):
             dictionary, offsets, ids = fmt.read_string_multi_column(data, payload)
-            values = pa.DictionaryArray.from_arrays(
-                pa.array(ids.astype(np.int32)), dictionary
-            ).cast(pa.string())
+            values = _dictionary_array(ids, dictionary, name).cast(pa.string())
             all_offsets = np.concatenate([[0], offsets]).astype(np.int32)
             arr = pa.ListArray.from_arrays(pa.array(all_offsets), values)
             if rows is not None:
@@ -105,9 +122,7 @@ class DruidSegment:
             return arr
         if vt == "STRING":
             dictionary, ids = fmt.read_string_column(data, payload, rows=rows)
-            return pa.DictionaryArray.from_arrays(
-                pa.array(ids.astype(np.int32)), dictionary
-            )
+            return _dictionary_array(ids, dictionary, name)
         if vt == "LONG":
             return pa.array(fmt.read_compressed_longs(data, payload, rows=rows))
         if vt == "DOUBLE":

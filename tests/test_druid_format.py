@@ -135,32 +135,82 @@ def test_vsize_ints_bad_version():
 
 
 def test_lz4_literal_roundtrip():
-    data = b"hello world " * 100 + bytes(range(256))
-    comp = fmt.lz4_block_compress_literal(data)
-    assert fmt.lz4_block_decompress(comp, len(data)) == data
+    # A literal-only block as every segment written before LZ4 went
+    # through Arrow holds it: token 0xF0, the literal length 15 + 255 +
+    # 30 spelled as extension bytes, then the literals.
+    data = bytes(range(256)) + b"hello world " * 3 + b"abcdefgh"
+    block = bytes([0xF0, 255, 30]) + data
+    assert len(data) == 15 + 255 + 30
+    assert fmt.decompress_block(fmt.LZ4, block, len(data)) == data
 
 
 def test_lz4_with_matches():
-    # Hand-built block with a real match sequence: 8 literals then an
-    # 8-byte match at offset 8 (doubles the literals), then final literals.
-    lit = b"ABCDEFGH"
-    block = bytes([0x84]) + lit + b"\x08\x00" + bytes([0x30]) + b"xyz"
-    out = fmt.lz4_block_decompress(block, 8 + 8 + 3)
-    assert out == lit + lit + b"xyz"
+    # repetitive input encodes as back-references, not literals
+    data = b"".join(b"ABCDEFGH%04d" % (i % 37) for i in range(400))
+    block = fmt.compress_block(fmt.LZ4, data)
+    assert len(block) < len(data) // 4
+    assert fmt.decompress_block(fmt.LZ4, block, len(data)) == data
 
 
 def test_lz4_overlapping_match_rle():
-    # 1 literal 'A', then match offset 1 len 19 => run-length expansion
-    block = bytes([0x1F]) + b"A" + b"\x01\x00" + bytes([0x00])
-    out = fmt.lz4_block_decompress(block, 20)
-    assert out == b"A" * 20
+    # a run encodes as one literal plus a match overlapping its own output
+    data = b"A" * 5000
+    block = fmt.compress_block(fmt.LZ4, data)
+    assert len(block) < 40
+    assert fmt.decompress_block(fmt.LZ4, block, len(data)) == data
 
 
-@given(st.binary(min_size=0, max_size=2048))
+@given(
+    st.one_of(
+        st.binary(max_size=2048), st.binary(max_size=8).map(lambda b: b * 300)
+    )
+)
 @settings(max_examples=50, deadline=None)
-def test_lz4_literal_roundtrip_property(data):
-    comp = fmt.lz4_block_compress_literal(data)
-    assert fmt.lz4_block_decompress(comp, len(data)) == data
+def test_lz4_roundtrip_property(data):
+    block = fmt.compress_block(fmt.LZ4, data)
+    assert fmt.decompress_block(fmt.LZ4, block, len(data)) == data
+
+
+def _real_lz4_block(n_values: int = 1024) -> tuple[bytes, bytes]:
+    values = np.cumsum(np.random.default_rng(3).integers(0, 50, n_values))
+    raw = values.astype(">i8").tobytes()
+    return raw, fmt.compress_block(fmt.LZ4, raw)
+
+
+def test_lz4_short_decode_raises():
+    # Arrow pads a block that decodes short with uninitialised bytes;
+    # the codec must reject it instead of returning them
+    raw, block = _real_lz4_block()
+    for out_size in (len(raw) + 1, len(raw) + 8, 255 * len(block) + 1):
+        with pytest.raises(fmt.DruidFormatError):
+            fmt.decompress_block(fmt.LZ4, block, out_size)
+    with pytest.raises(fmt.DruidFormatError):
+        fmt.decompress_block(fmt.LZ4, block, 0)
+    empty = fmt.compress_block(fmt.LZ4, b"")
+    assert fmt.decompress_block(fmt.LZ4, empty, 0) == b""
+    with pytest.raises(fmt.DruidFormatError):
+        fmt.decompress_block(fmt.LZ4, empty, 1)
+
+
+def _decode_after_poison(byte: int, block: bytes, out_size: int) -> bytes:
+    # freed out_size buffers full of `byte` are what the decoder's output
+    # allocation reuses, so output bytes the block never wrote show it
+    junk = [bytes([byte]) * out_size for _ in range(4)]
+    del junk
+    return fmt.decompress_block(fmt.LZ4, block, out_size)
+
+
+def test_lz4_bit_flips_raise_or_fill_block():
+    raw, block = _real_lz4_block()
+    for bit in range(len(block) * 8):
+        flipped = bytearray(block)
+        flipped[bit // 8] ^= 1 << (bit % 8)
+        try:
+            out = _decode_after_poison(0xAB, bytes(flipped), len(raw))
+        except fmt.DruidFormatError:
+            continue
+        assert len(out) == len(raw)
+        assert out == _decode_after_poison(0x5C, bytes(flipped), len(raw))
 
 
 # --- Compressed columnar numerics ----------------------------------------
@@ -182,15 +232,16 @@ def test_compressed_doubles_multiblock(strategy):
     assert np.array_equal(fmt.read_compressed_doubles(data), values)
 
 
-def test_zstd_block_roundtrip_and_real_compression():
-    """ZSTD is a real codec here (Arrow's), not literal-only: repetitive
-    input must actually shrink, and the frame round-trips bit-exactly.
-    The reference ERRORS on ZSTD (compression/mod.rs:43-44) — this is
+@pytest.mark.parametrize("strategy", [fmt.LZ4, fmt.ZSTD], ids=["lz4", "zstd"])
+def test_block_roundtrip_and_real_compression(strategy):
+    """LZ4 and ZSTD are real codecs here (Arrow's): repetitive input
+    must actually shrink, and the block round-trips bit-exactly. The
+    reference ERRORS on ZSTD (compression/mod.rs:43-44) — that is
     beyond-parity surface for modern Druid deployments."""
     raw = b"druid segment block " * 500
-    comp = fmt.compress_block(fmt.ZSTD, raw)
+    comp = fmt.compress_block(strategy, raw)
     assert len(comp) < len(raw) // 10
-    assert fmt.decompress_block(fmt.ZSTD, comp, len(raw)) == raw
+    assert fmt.decompress_block(strategy, comp, len(raw)) == raw
 
 
 def test_compressed_floats():
@@ -220,15 +271,13 @@ def test_corrupt_and_unknown_compression_errors():
             fmt.decompress_block(strat, b"xx", 2)
     with pytest.raises(fmt.DruidFormatError):
         fmt.decompress_block(0x7A, b"xx", 2)
-    # LZ4 blocks truncated inside the literal-length extension, the
-    # 2-byte match offset and the match-length extension
-    for block in (
-        bytes([0x10, 0x41, 0x01]),
-        bytes([0xF0]),
-        bytes([0x1F, 0x41, 0x01, 0x00]),
-    ):
-        with pytest.raises(fmt.DruidFormatError):
-            fmt.lz4_block_decompress(block, 64)
+    # every truncation of a real LZ4 block, and of a real ZSTD frame
+    raw, block = _real_lz4_block(256)
+    frame = fmt.compress_block(fmt.ZSTD, raw)
+    for strat, data in ((fmt.LZ4, block), (fmt.ZSTD, frame)):
+        for keep in range(len(data)):
+            with pytest.raises(fmt.DruidFormatError):
+                fmt.decompress_block(strat, data[:keep], len(raw))
 
 
 # --- String column --------------------------------------------------------
